@@ -104,6 +104,8 @@ def sparql_breakdown():
 
         sc.setJobDescription("full query")
         timed("full query collect", lambda: query(t, SPARQL_TEXT).collect())
+        out = query(t, SPARQL_TEXT)
+        out.collect()  # the formatted plan below is the executed adaptive plan
         with open(os.path.join(REPO, "plans", "r06", "sparql_full.txt"), "w") as f:
             f.write(out._jdf.queryExecution().explainString(spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
         t.unpersist()

@@ -34,26 +34,31 @@ def main() -> None:
     from pyspark.sql import SparkSession
 
     spark = SparkSession.builder.appName("sophia-rs-spark-pipeline").getOrCreate()
-    from sophia_rs_spark.plans.pipeline import run_pipeline
+    from sophia_rs_spark.plans.pipeline import load_manifest, run_pipeline
 
     t0 = time.time()
     pages = spark.read.parquet(args.pages)
-    out = run_pipeline(
+    run_pipeline(
         spark,
         pages,
         args.workdir,
         strict=args.strict,
         salt_partitions=args.salt_partitions,
     )
-    n_graph = out["graph"].count()
     elapsed = time.time() - t0
+    # the stage manifests already hold every row count: no recount jobs
+    rows = {
+        st: load_manifest(args.workdir, st)["rows"]
+        for st in ("graph", "terms", "quarantine", "components", "lineage")
+    }
+    n_graph = rows["graph"]
     report = {
         "pages": pages.count(),
         "graph_rows": n_graph,
-        "terms": out["terms"].count(),
-        "quarantined": out["quarantine"].count(),
-        "components": out["components"].count(),
-        "lineage_partitions": out["lineage"].count(),
+        "terms": rows["terms"],
+        "quarantined": rows["quarantine"],
+        "components": rows["components"],
+        "lineage_partitions": rows["lineage"],
         "elapsed_sec": round(elapsed, 3),
         "triples_per_sec": round(n_graph / elapsed, 1),
         "parallelism": spark.sparkContext.defaultParallelism,

@@ -942,11 +942,6 @@ def xsd_decimal(term: Column) -> Column:
     )
 
 
-def xsd_datetime(term: Column) -> Column:
-    """xsd:dateTime() constructor: lexical → timestamp, NULL on error."""
-    return lex(term).try_cast("timestamp")
-
-
 # --- EBV / boolean layer ----------------------------------------------------
 
 

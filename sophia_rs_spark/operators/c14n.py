@@ -253,6 +253,12 @@ def canonicalize_by_url(quads_df):
     # three complete parse passes, measured ~2 extra passes at sf0.1).
     # A lazy localCheckpoint materializes it once inside the same job;
     # at 100 TB one materialization strictly beats three recomputes.
+    # Tradeoff: the checkpoint truncates lineage, so losing an executor
+    # that holds checkpointed blocks fails downstream actions instead
+    # of recomputing them.  persist(MEMORY_AND_DISK) keeps the lineage
+    # (still computed once) at the cost of holding the blocks until
+    # unpersisted; a reliable checkpoint survives the loss but writes
+    # to the checkpoint directory.
     df = df.localCheckpoint(eager=False)
     has_bnode = (
         F.col("s").startswith("_:")

@@ -25,16 +25,6 @@ def exact_fingerprints(docs: DataFrame, text_col: str = "text", id_col: str = "d
     return docs.select(id_col, F.expr(f"md5({text_col})").alias("fp"))
 
 
-def exact_duplicate_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact-duplicate groups: (fp, n, keep_id=min id) for groups >1."""
-    return (
-        exact_fingerprints(docs, text_col, id_col)
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("n") > 1)
-    )
-
-
 def word_shingles(docs: DataFrame, k: int = 3, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """k-word shingles: (doc_id, shingle); documents shorter than k words
     are dropped (same rule as the oracle)."""

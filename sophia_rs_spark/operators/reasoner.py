@@ -34,10 +34,6 @@ T_LITERAL_CLS = f"<{RDFS}Literal>"
 _CONTAINER_PRED_RE = f"^<{RDF}_[0-9]+>$"
 
 
-def _pairs(triples: DataFrame, pred: str) -> DataFrame:
-    return triples.filter(F.col("p") == pred).select("s", "o")
-
-
 def transitive_closure(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Transitive closure of an (s, o) relation by iterated doubling:
     O(log(path length)) joins (vs sophia's one-step-per-iteration inner

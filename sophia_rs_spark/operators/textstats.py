@@ -1,5 +1,5 @@
-"""Text-analysis operators for training-data pipelines: language ID,
-quality scoring, token counting, document fingerprinting.
+"""Text-analysis operators for training-data pipelines: BPE-style token
+counting and document fingerprinting.
 
 All pure built-in-function compositions (JVM-side); every output column
 is integer/boolean/string so the DuckDB oracle hashes identically.
@@ -9,28 +9,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-STOPWORDS = {
-    "en": ["the", "a", "of", "and", "is", "to"],
-    "fr": ["le", "la", "de", "et", "est"],
-    "de": ["der", "die", "das", "und", "ist"],
-    "es": ["el", "la", "de", "y", "es"],
-}
-
-
-def token_stats(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Whitespace token counts + a BPE-ish subword proxy (4-char chunks)."""
-    toks = F.split(F.col(text_col), " ")
-    return docs.select(
-        id_col,
-        F.size(toks).alias("n_tokens"),
-        F.length(F.replace(F.col(text_col), F.lit(" "), F.lit(""))).alias("tok_chars"),
-        F.array_max(F.transform(toks, lambda t: F.length(t))).alias("max_tok_len"),
-        F.ceil(
-            F.length(F.replace(F.col(text_col), F.lit(" "), F.lit(""))) / 4.0
-        ).cast("bigint").alias("approx_bpe_tokens"),
-    )
-
 
 # GPT-2-style pretokenizer shape, simplified to constructs whose
 # semantics are identical in Java regex (Spark) and RE2 (DuckDB)
@@ -48,39 +26,6 @@ def bpe_token_counts(docs: DataFrame, text_col: str = "text", id_col: str = "doc
         F.size(toks).alias("n_bpe_tokens"),
         F.size(words).alias("n_word_tokens"),
     )
-
-
-def quality_scores(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Heuristic quality flags: length gate, stopword density, mean word
-    length band, repetition (distinct-token ratio)."""
-    toks = F.split(F.col(text_col), " ")
-    n = F.size(toks)
-    stop = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS["en"])))
-    distinct_ratio_pm = F.floor(F.size(F.array_distinct(toks)) * 1000 / n)
-    return docs.select(
-        id_col,
-        (F.length(text_col) >= 100).alias("len_ok"),
-        stop.alias("n_stopwords"),
-        F.floor(stop * 1000 / n).cast("bigint").alias("stop_permille"),
-        distinct_ratio_pm.cast("bigint").alias("distinct_permille"),
-    )
-
-
-def language_id(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Stopword-vote language ID: the language whose stopword hits are
-    most frequent; deterministic tie-break by language code order."""
-    toks = F.split(F.col(text_col), " ")
-    scores = [
-        F.size(F.filter(toks, lambda t: t.isin(*words))).alias(f"score_{lang}")
-        for lang, words in sorted(STOPWORDS.items())
-    ]
-    scored = docs.select(id_col, F.col(text_col), *scores)
-    langs = sorted(STOPWORDS)
-    best = F.greatest(*[F.col(f"score_{l}") for l in langs])
-    pred = F.when(best <= 0, "und")
-    for l in langs:
-        pred = pred.when(F.col(f"score_{l}") == best, l)
-    return scored.select(id_col, pred.alias("lang_pred"), best.alias("lang_score"))
 
 
 def rolling_fingerprint(docs: DataFrame, window: int = 8, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -246,17 +246,6 @@ def write_bucketed_terms(
     )
 
 
-def encode_nquads(quads: DataFrame) -> DataFrame:
-    """Canonical N-Quads line per quad (`turtle/src/serializer/nq.rs`):
-    pure column concat — JVM-side, codegen-friendly."""
-    parts = [F.col("s"), F.col("p"), F.col("o")]
-    if "g" in quads.columns:
-        parts.append(F.col("g"))  # concat_ws skips NULL → default graph
-    return quads.select(
-        F.concat(F.concat_ws(" ", *parts), F.lit(" .")).alias("line")
-    )
-
-
 def lineage(
     stage: str, quads: DataFrame
 ) -> DataFrame:

@@ -4,11 +4,15 @@ per-partition lineage + manifests (north rule).
 Stage model (SURVEY.md §2.11): each stage writes its output table to
 ``<workdir>/<stage>/`` as parquet plus a ``_MANIFEST.json`` recording row
 count, an order-independent checksum, the schema, and upstream stage
-manifest checksums.  ``run_stage`` skips recomputation when a valid
-manifest exists — resuming a killed pipeline replays only missing
-stages.  (Iceberg would give us this via snapshots; the sandbox has no
-Iceberg jars, so the same contract is implemented over parquet — the
-writer is behind this one interface, as planned in SURVEY.md §7.)
+manifest checksums.  The row count and checksum are observed during the
+write itself (``DataFrame.observe``), so committing a stage runs no job
+besides the write.  Stages reopen with the recorded schema, so reading
+one back runs no schema-inference job.  ``run_stage`` skips
+recomputation when a valid manifest exists — resuming a killed pipeline
+replays only missing stages.  (Iceberg would give us this via
+snapshots; without Iceberg jars the same contract is implemented over
+parquet — the writer is behind this one interface, as planned in
+SURVEY.md §7.)
 
 The full flow: pages → extract (quads + quarantine) → link (connected
 components) → canonicalize (rewrite through component map) →
@@ -22,8 +26,10 @@ import os
 import time
 from typing import Callable, Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import ParseException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 from ..operators.linking import (
     canonicalize_entities,
@@ -33,16 +39,6 @@ from ..operators.linking import (
 from .extract import extract_quads, graph_table, split_quarantine, term_table
 
 MANIFEST = "_MANIFEST.json"
-
-
-def _checksum(df: DataFrame) -> int:
-    cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in df.columns]
-    row = (
-        df.select(F.xxhash64(*cols).alias("h"))
-        .agg(F.expr("bit_xor(h)").alias("chk"))
-        .collect()[0]
-    )
-    return row["chk"] if row["chk"] is not None else 0
 
 
 def manifest_path(workdir: str, stage: str) -> str:
@@ -55,6 +51,17 @@ def load_manifest(workdir: str, stage: str) -> Optional[dict]:
         return None
     with open(p) as f:
         return json.load(f)
+
+
+def _recorded_schema(man: dict) -> Optional[StructType]:
+    """The stage schema a manifest recorded, or None when its column
+    names do not parse back from the ``simpleString`` form (a name that
+    is not a plain identifier, such as ``count(1)``); such a stage
+    reopens with the schema inferred from its files."""
+    try:
+        return _parse_datatype_string(man["schema"])
+    except ParseException:
+        return None
 
 
 def run_stage(
@@ -71,7 +78,19 @@ def run_stage(
 
     A cached stage is reused only if its manifest exists AND every
     dependency's current manifest checksum matches what this stage
-    recorded — upstream changes invalidate downstream stages.
+    recorded — upstream changes invalidate downstream stages.  A reused
+    stage opens with the manifest's schema and runs no Spark job.
+
+    A computed stage is committed in one pass: the write observes the
+    row count and the checksum (``bit_xor`` of ``xxhash64`` over every
+    column cast to string, NULL as ``\\x00``; independent of row order
+    and partitioning).  Columns are hashed and recorded in the order a
+    re-read has them, the ``partition_by`` columns last.  Partition
+    columns keep their written type: the stage reopens with it instead
+    of the type Spark would infer from the directory names (a ``bigint``
+    column of small values stays ``bigint``, not ``int``).  A string
+    partition value that a directory name cannot carry (``""``) reads
+    back as NULL, but is hashed as written.
     """
     out_dir = os.path.join(workdir, stage)
     dep_chk = {d: (load_manifest(workdir, d) or {}).get("checksum") for d in deps}
@@ -82,20 +101,33 @@ def run_stage(
         and man.get("deps") == dep_chk
         and os.path.exists(os.path.join(out_dir, "_SUCCESS"))
     ):
-        return spark.read.parquet(out_dir)
+        schema = _recorded_schema(man)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(out_dir)
 
     t0 = time.time()
     df = compute()
-    writer = df.write.mode("overwrite")
+    schema = StructType(
+        [f for f in df.schema if f.name not in partition_by]
+        + [df.schema[c] for c in partition_by]
+    )
+    cols = [F.coalesce(F.col(f.name).cast("string"), F.lit("\x00")) for f in schema]
+    obs = Observation()
+    writer = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.bit_xor(F.xxhash64(*cols)).alias("checksum"),
+    ).write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(out_dir)
-    out = spark.read.parquet(out_dir)
+    out = spark.read.schema(schema).parquet(out_dir)
+    seen = obs.get
     man = {
         "stage": stage,
-        "rows": out.count(),
-        "checksum": _checksum(out),
-        "schema": out.schema.simpleString(),
+        "rows": seen["rows"],
+        "checksum": seen["checksum"] or 0,  # bit_xor of no rows is NULL
+        "schema": schema.simpleString(),
         "deps": dep_chk,
         "elapsed_sec": round(time.time() - t0, 3),
         "partitions": out.rdd.getNumPartitions(),

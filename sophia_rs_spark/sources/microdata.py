@@ -47,15 +47,6 @@ def _vocab_of(type_iri: str) -> str:
     return type_iri
 
 
-class _Frame:
-    __slots__ = ("node", "vocab", "tag", "depth", "prop", "buf", "capturing")
-
-    def __init__(self, node: Optional[str], vocab: str, tag: str):
-        self.node = node
-        self.vocab = vocab
-        self.tag = tag
-
-
 class _MicrodataExtractor(HTMLParser):
     """Single pass producing microdata + RDFa-lite triples."""
 

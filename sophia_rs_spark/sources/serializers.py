@@ -34,11 +34,6 @@ def nquads_lines(quads: DataFrame, *, canonical: bool = True) -> DataFrame:
     )
 
 
-def write_nquads(quads: DataFrame, path: str, *, canonical: bool = True) -> None:
-    """Distributed N-Quads output (one text file per partition)."""
-    nquads_lines(quads, canonical=canonical).write.mode("overwrite").text(path)
-
-
 def canonical_nquads(quads_with_url: DataFrame) -> List[str]:
     """Golden-file output: RDFC-1.0 relabel per url + globally sorted
     canonical N-Quads (the c14n example flow, SURVEY.md §3.3).

@@ -756,14 +756,6 @@ def _term_family(t: str) -> str:
     return "str"  # simple or language-tagged literal
 
 
-def _lit_unrecognized(term_str: Column) -> Column:
-    """Literal with an unrecognized datatype OR an ill-formed lexical for
-    a recognized one — the operands that poison = / != (test.rs matrix)."""
-    from ..operators.validate import is_ill_typed
-
-    return ~FN.datatype(term_str).isin(_recognized_dts()) | is_ill_typed(term_str)
-
-
 def _bool(
     e: A.Expr,
     df: DataFrame,
@@ -3046,9 +3038,10 @@ def _select_df(ctx: _Ctx, q: A.Query):
 # ``where(TRUE)`` (optimized away), so the returned frame carries fresh
 # RDD lineage and every action recomputes from the sources — Spark
 # cannot skip shuffle stages of a previous run.  ASK (whose result is a
-# bool, i.e. an eagerly computed value) and NOW()-pinning queries are
-# never cached.  Keyed weakly on the triples DataFrame object so plans
-# die with their dataset.
+# bool, i.e. an eagerly computed value), NOW()-pinning queries and
+# SERVICE queries (the remote bindings are fetched at plan build and
+# embedded in the plan) are never cached.  Keyed weakly on the triples
+# DataFrame object so plans die with their dataset.
 _PREPARED: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _PREPARED_CAP = 32
 
@@ -3058,7 +3051,7 @@ def query(triples: DataFrame, text: str, base: Optional[str] = None):
     (`sparql/src/wrapper.rs:20-85`).  Repeated identical query text
     against the same dataset frame reuses the compiled plan (see
     ``_PREPARED`` above); execution always recomputes."""
-    if re.search(r"\bNOW\s*\(", text, re.IGNORECASE):
+    if re.search(r"\bNOW\s*\(|\bSERVICE\b", text, re.IGNORECASE):
         return evaluate(triples, A.parse_query(text, base))
     try:
         per = _PREPARED.get(triples)

@@ -30,6 +30,7 @@ import json
 from typing import Any, Dict, List, Optional
 from xml.sax.saxutils import escape as _x
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 from ..functions.triple_terms import split_triple_term
@@ -115,17 +116,20 @@ class _Probed:
     the frame is persisted around the probe, so when the large path then
     renders the full result, the partitions the probe already computed
     are served from storage instead of the whole (possibly UDF-heavy)
-    plan re-executing from scratch.  Always unpersisted on exit; no
-    state survives the call."""
+    plan re-executing from scratch.  Only a frame that is not already
+    cached is persisted, and only what this probe persisted is
+    unpersisted on exit: a caller's own cache survives the call."""
 
     def __init__(self, df):
-        self.df = df.persist()
+        self.owned = df.storageLevel == StorageLevel.NONE
+        self.df = df.persist() if self.owned else df
 
     def __enter__(self):
         return self.df, self.df.limit(_DELEGATE_ROWS + 1).collect()
 
     def __exit__(self, *exc):
-        self.df.unpersist()
+        if self.owned:
+            self.df.unpersist()
         return False
 
 

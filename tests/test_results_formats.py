@@ -175,3 +175,18 @@ class TestDistributedLines:
         assert R.bindings_to_json(res) == small_json
         assert R.bindings_to_xml(res) == small_xml
         assert R.bindings_to_tsv(res) == small_tsv
+
+    def test_caller_cache_survives_render(self, spark, data):
+        """Rendering a frame the caller cached keeps the caller's cache;
+        an uncached frame is left uncached."""
+        from pyspark import StorageLevel
+
+        cached = query(data, PFX + "SELECT ?s ?n WHERE { ?s :name ?n }").cache()
+        plain = query(data, PFX + "SELECT ?s WHERE { ?s :age ?a }")
+        try:
+            bindings_to_json(cached)
+            bindings_to_json(plain)
+            assert cached.storageLevel != StorageLevel.NONE
+            assert plain.storageLevel == StorageLevel.NONE
+        finally:
+            cached.unpersist()

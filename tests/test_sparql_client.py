@@ -400,3 +400,32 @@ class TestServiceClause:
                 ).collect()
         finally:
             set_service_transport(None)
+
+    def test_repeat_sees_new_transport(self, spark, local):
+        """The prepared-plan memo must not freeze SERVICE bindings: the
+        same query text after a transport swap sees the new response."""
+        from sophia_rs_spark.sparql import set_service_transport
+
+        def serving(label):
+            doc = {
+                "head": {"vars": ["o", "lbl"]},
+                "results": {"bindings": [{
+                    "o": {"type": "uri", "value": "x:o1"},
+                    "lbl": {"type": "literal", "value": label},
+                }]},
+            }
+            return fake("application/sparql-results+json", to_json_str(doc))
+
+        text = (
+            "SELECT ?s ?lbl { ?s <x:p> ?o"
+            "  SERVICE <http://ep/s> { ?o <x:label> ?lbl } }"
+        )
+        try:
+            set_service_transport(serving("first"))
+            first = sparql_query(local, text).collect()
+            set_service_transport(serving("second"))
+            second = sparql_query(local, text).collect()
+        finally:
+            set_service_transport(None)
+        assert [tuple(r) for r in first] == [("<x:s1>", '"first"')]
+        assert [tuple(r) for r in second] == [("<x:s1>", '"second"')]
