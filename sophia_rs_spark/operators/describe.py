@@ -14,8 +14,11 @@ the DESCRIBE battery in `sparql/src/test.rs:2352-2455`):
 - terms mentioned only INSIDE an (unasserted) triple term do not pull
   that triple in.
 
-Each round is a pair of semi-joins over the triples table keyed by the
-(small) frontier, so the loop is frontier-sized, not corpus-sized.
+Each round is a :func:`~.fixpoint.semi_naive` step: semi-joins over the
+triples table keyed by the (small) set of blank nodes and triple terms of
+the previous round's new triples, so the loop is frontier-sized, not
+corpus-sized; the anti-join against the triples already included drops
+repeats, so a blank node met twice adds nothing the second time.
 """
 
 from __future__ import annotations
@@ -25,6 +28,8 @@ from typing import Iterator, List
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import semi_naive
 
 
 def _tt_bnodes(enc: str, out: List[str]) -> None:
@@ -63,51 +68,32 @@ def _bnode_terms(df: DataFrame) -> DataFrame:
     return direct.unionByName(inside).distinct()
 
 
+def _mentioning(triples: DataFrame, terms: DataFrame) -> DataFrame:
+    """Triples with a ``term`` in subject or object position."""
+    by_s = triples.join(terms.withColumnRenamed("term", "s"), "s", "left_semi")
+    by_o = triples.join(terms.withColumnRenamed("term", "o"), "o", "left_semi")
+    return by_s.unionByName(by_o)
+
+
 def describe(triples: DataFrame, seeds: DataFrame, max_iter: int = 20) -> DataFrame:
     """CBD of the seed terms (column ``term``) over triples (s, p, o)."""
-    visited = seeds.select(F.col("term")).distinct().localCheckpoint(eager=True)
-    frontier = visited
-    out = None
-    # triple terms of triples included in the previous round (for the
-    # reification pull); starts empty
-    prev_tts = None
-    for _ in range(max_iter):
-        parts = []
-        if frontier is not None:
-            parts.append(
-                triples.join(
-                    frontier.withColumnRenamed("term", "s"), "s", "left_semi"
-                )
-            )
-            parts.append(
-                triples.join(
-                    frontier.withColumnRenamed("term", "o"), "o", "left_semi"
-                )
-            )
-        if prev_tts is not None:
-            parts.append(triples.join(prev_tts, "o", "left_semi"))
-        step = parts[0]
-        for p in parts[1:]:
-            step = step.unionByName(p)
-        step = step.dropDuplicates(["s", "p", "o"])
-        if out is not None:
-            step = step.join(out, ["s", "p", "o"], "left_anti")
-        step = step.localCheckpoint(eager=True)
-        if step.isEmpty():
-            break
-        out = step if out is None else out.unionByName(step).localCheckpoint(eager=True)
-        # next round: new bnodes (incl. inside tts) + reification keys
-        bnodes = _bnode_terms(step)
-        new = bnodes.join(visited, "term", "left_anti").localCheckpoint(eager=True)
-        visited = visited.unionByName(new).localCheckpoint(eager=True)
-        frontier = new if not new.isEmpty() else None
-        prev_tts = step.select(
+    spo = triples.select("s", "p", "o")
+    base = _mentioning(spo, seeds.select("term")).distinct()
+
+    def expand(new: DataFrame, _known: DataFrame, _row) -> DataFrame:
+        # new blank nodes (incl. inside triple terms) + reification keys
+        tts = new.select(
             F.concat(
                 F.lit("<<( "), "s", F.lit(" "), "p", F.lit(" "), "o", F.lit(" )>>")
             ).alias("o")
-        ).distinct()
-        if frontier is None and prev_tts is None:
-            break
-    if out is None:
-        return triples.limit(0).select("s", "p", "o")
-    return out.select("s", "p", "o").dropDuplicates(["s", "p", "o"])
+        )
+        return _mentioning(spo, _bnode_terms(new)).unionByName(
+            spo.join(tts, "o", "left_semi")
+        )
+
+    return semi_naive(
+        "describe",
+        base.localCheckpoint(eager=False),
+        expand,
+        max_iter=max_iter,
+    )

@@ -6,17 +6,17 @@ member is rewritten to the component's canonical id (the minimum member
 in canonical-string order — deterministic, cluster-size-independent).
 
 Algorithm: iterative min-label propagation over the symmetrized edge
-list — a driver-side loop of DataFrame joins with ``localCheckpoint``
-per iteration to cut lineage (SURVEY.md §4 "iterative fixpoints").
+list, one DataFrame step per round of the shared driver
+(:func:`~.fixpoint.fixpoint`; SURVEY.md §4 "iterative fixpoints").
 Iterations = O(longest chain); sameAs chains in web data are short.
-At 100 TB scale the same loop applies with persisted intermediate
-tables; AQE handles the shrinking frontier.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import fixpoint
 
 OWL_SAMEAS = "<http://www.w3.org/2002/07/owl#sameAs>"
 
@@ -31,7 +31,6 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
-    checkpoint_every: int = 1,
     stats: dict | None = None,
 ) -> DataFrame:
     """(src, dst) undirected edges → (member, comp) with comp = min member
@@ -43,53 +42,47 @@ def connected_components(
     Deterministic for any partitioning: min is order-insensitive.
 
     Convergence probe is free: the old label rides along in the same
-    row as the new one, so "did anything change" is a filter over the
-    just-checkpointed frame — no extra labels⋈labels join per round.
+    row as the new one, so "did anything change" is the round's
+    aggregate over its own frame — no extra labels⋈labels join per round.
     """
     und = edges.select("src", "dst").unionByName(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    labels = (
+    seed = (
         und.select(F.col("src").alias("member"))
         .distinct()
         .withColumn("comp", F.col("member"))
     )
-    # r6: lazy — both materialize inside round 1's changed-count job
-    # (two fewer driver job barriers; every round still reads the
-    # materialized partitions)
+    # lazy: both materialize inside round 1's job
     und = und.localCheckpoint(eager=False)
-    labels = labels.localCheckpoint(eager=False)
+    seed = seed.localCheckpoint(eager=False)
 
-    iters = 0
-    for i in range(max_iter):
-        iters = i + 1
+    def relax(prev: DataFrame | None, _row) -> DataFrame:
+        labels = seed if prev is None else prev.select("member", "comp")
         # neighbor minimum: for each vertex, min comp among its neighbors
         nbr_min = (
             und.join(labels, und["dst"] == labels["member"], "inner")
             .groupBy("src")
             .agg(F.min("comp").alias("nbr_comp"))
         )
-        stepped = (
-            labels.join(nbr_min, labels["member"] == nbr_min["src"], "left_outer")
-            .select(
-                "member",
-                F.least(
-                    F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
-                ).alias("comp"),
-                F.col("comp").alias("_prev"),
-            )
-            # lazy: materialized by the changed-count job below — ONE
-            # driver action per round, not two (checkpoint + isEmpty)
-            .localCheckpoint(eager=False)
+        return labels.join(
+            nbr_min, labels["member"] == nbr_min["src"], "left_outer"
+        ).select(
+            "member",
+            F.least(
+                F.col("comp"), F.coalesce(F.col("nbr_comp"), F.col("comp"))
+            ).alias("comp"),
+            F.col("comp").alias("_prev"),
         )
-        labels = stepped.select("member", "comp")
-        changed = stepped.agg(
-            F.sum((F.col("comp") != F.col("_prev")).cast("int")).alias("c")
-        ).first()["c"]
-        if not changed:
-            break
-    if stats is not None:
-        stats["iterations"] = iters
+
+    labels = fixpoint(
+        "connected_components",
+        relax,
+        lambda row, _prev: not row["c"],
+        [F.sum((F.col("comp") != F.col("_prev")).cast("int")).alias("c")],
+        max_iter=max_iter,
+        stats=stats,
+    )
     return labels.select("member", "comp")
 
 
@@ -145,39 +138,21 @@ def connected_components_alternating(
         .unionByName(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-
-    def _sig(df: DataFrame):
-        r = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.bit_xor(F.xxhash64("src", "dst")).alias("h"),
-        ).collect()[0]
-        return (r["n"], r["h"])
-
-    cur = und
-    sig = _sig(cur)
-    iters = 0
-    for i in range(max_iter):
-        iters = i + 1
-        stepped = _small_star(_large_star(cur))
-        # lazy: the signature aggregate materializes the checkpoint —
-        # one driver action per round
-        stepped = stepped.localCheckpoint(eager=False)
-        nsig = _sig(stepped)
-        cur = stepped
-        if nsig == sig:
-            break
-        sig = nsig
+    cur = fixpoint(
+        "connected_components_alternating",
+        lambda prev, _row: _small_star(_large_star(und if prev is None else prev)),
+        lambda row, prev: row == prev,
+        [F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("src", "dst")).alias("h")],
+        max_iter=max_iter,
+        stats=stats,
+    )
     # fixpoint is a star forest: every edge (v, root) with root = comp min
     members = cur.select(F.col("src").alias("member"), F.col("dst").alias("comp"))
     roots = cur.select(F.col("dst").alias("member")).distinct().withColumn(
         "comp", F.col("member")
     )
-    out = members.unionByName(roots).distinct()
-    if stats is not None:
-        stats["iterations"] = iters
-    return out
+    return members.unionByName(roots).distinct()
 
 
 BROADCAST_MAP_MAX_ROWS = 5_000_000  # ~a few hundred MB of canonical ids

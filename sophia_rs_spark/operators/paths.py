@@ -9,9 +9,9 @@ Mapping from sophia's path evaluator (`sparql/src/exec.rs:338-482`,
 - Alternative      → union
 - ZeroOrOne (p?)   → zero-pairs ∪ one step
 - ZeroOrMore (p*) / OneOrMore (p+) → distributed BFS: frontier join with
-  visited-set anti-join, loop until the frontier is empty — the
-  DataFrame fixpoint replacing sophia's single-threaded
-  ``PathOrMore`` iterator (checkpointed per iteration to cut lineage)
+  visited-set anti-join, loop until the frontier is empty — a
+  :func:`~.fixpoint.semi_naive` closure replacing sophia's
+  single-threaded ``PathOrMore`` iterator
 - NegatedPropertySet → predicate NOT IN
 
 Every function takes and returns a *pair relation* DataFrame with
@@ -25,6 +25,8 @@ from typing import List
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .fixpoint import semi_naive
 
 
 def pred(triples: DataFrame, predicate: str) -> DataFrame:
@@ -82,27 +84,15 @@ def one_or_more(pairs: DataFrame, max_iter: int = 40) -> DataFrame:
     """`path+`: BFS frontier expansion with visited anti-join
     (`path_or_more.rs:21-123` as a distributed fixpoint)."""
     base = pairs.distinct().localCheckpoint(eager=True)
-    reached = base
-    frontier = base
-    for _ in range(max_iter):
-        step = (
+
+    def hop(frontier: DataFrame, _reached: DataFrame, _row) -> DataFrame:
+        return (
             frontier.alias("f")
             .join(base.alias("b"), F.col("f.dst") == F.col("b.src"))
             .select(F.col("f.src").alias("src"), F.col("b.dst").alias("dst"))
-            .distinct()
         )
-        # lazy checkpoint materialized by the count job (count scans all
-        # partitions, so every checkpoint block lands) — ONE driver
-        # action per BFS round; `reached` stays a union of checkpointed
-        # deltas, never re-materialized (lineage depth = one union/round)
-        new = step.join(reached, ["src", "dst"], "left_anti").localCheckpoint(
-            eager=False
-        )
-        if new.count() == 0:
-            break
-        reached = reached.unionByName(new)
-        frontier = new
-    return reached
+
+    return semi_naive("one_or_more", base, hop, max_iter=max_iter)
 
 
 def zero_or_more(pairs: DataFrame, triples: DataFrame, max_iter: int = 40) -> DataFrame:

@@ -4,10 +4,11 @@ Re-expresses sophia's ``reasoner`` crate rulesets (Simple/RDF/RDFS,
 `reasoner/src/ruleset/_rdfs.rs:32-99`): the same rule battery — rdfs2
 (domain), rdfs3 (range), rdfs5/rdfs11 (subPropertyOf/subClassOf
 transitive closure), rdfs7 (property inheritance), rdfs9 (class
-inheritance) — each rule a distributed join; saturation is a driver-side
-loop-until-no-new-rows (sophia's ``while changed`` at `_rdfs.rs:57-97`),
-with the small schema tables (subClassOf/subPropertyOf/domain/range)
-broadcast so instance-side rules never shuffle the big triple table.
+inheritance) — each rule a distributed join; saturation is a
+:func:`~.fixpoint.semi_naive` loop-until-no-new-rows (sophia's
+``while changed`` at `_rdfs.rs:57-97`), with the small schema tables
+(subClassOf/subPropertyOf/domain/range) broadcast so instance-side rules
+never shuffle the big triple table.
 
 Vocabulary-axiom preparation (``prepare_rdf_vocab``/``prepare_rdfs_
 vocab``) and container-membership rules are out of scope for round 1;
@@ -21,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..terms.model import RDF, RDFS
+from .fixpoint import semi_naive
 
 T_TYPE = f"<{RDF}type>"
 T_SUBCLASS = f"<{RDFS}subClassOf>"
@@ -34,22 +36,28 @@ T_LITERAL_CLS = f"<{RDFS}Literal>"
 _CONTAINER_PRED_RE = f"^<{RDF}_[0-9]+>$"
 
 
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """a∘b: the (s, o) pairs with a middle node a.o = b.s."""
+    return (
+        a.alias("a")
+        .join(b.alias("b"), F.col("a.o") == F.col("b.s"))
+        .select(F.col("a.s").alias("s"), F.col("b.o").alias("o"))
+    )
+
+
 def transitive_closure(pairs: DataFrame, max_iter: int = 30) -> DataFrame:
-    """Transitive closure of an (s, o) relation by iterated doubling:
-    O(log(path length)) joins (vs sophia's one-step-per-iteration inner
-    loops, `_rdfs.rs:73-78,85-90`)."""
-    closure = pairs.distinct().localCheckpoint(eager=True)
-    for _ in range(max_iter):
-        nxt = (
-            closure.alias("a")
-            .join(closure.alias("b"), F.col("a.o") == F.col("b.s"))
-            .select(F.col("a.s").alias("s"), F.col("b.o").alias("o"))
-        )
-        new_closure = closure.unionByName(nxt).distinct().localCheckpoint(eager=True)
-        if new_closure.count() == closure.count():
-            return new_closure
-        closure = new_closure
-    return closure
+    """Transitive closure of an (s, o) relation by semi-naive doubling:
+    T ∪= (Δ∘T ∪ T∘Δ) − T, O(log(path length)) rounds (vs sophia's
+    one-step-per-iteration inner loops, `_rdfs.rs:73-78,85-90`)."""
+    base = pairs.distinct().localCheckpoint(eager=True)
+    return semi_naive(
+        "transitive_closure",
+        base,
+        lambda delta, closure, _row: _compose(delta, closure).unionByName(
+            _compose(closure, delta)
+        ),
+        max_iter=max_iter,
+    )
 
 
 # Axiomatic triples of the RDF/RDFS vocabularies (rdf12-semantics §9;
@@ -151,18 +159,24 @@ _SCHEMA_PREDS = (T_SUBPROP, T_SUBCLASS, T_DOMAIN, T_RANGE)
 _SCHEMA_COLLECT_CAP = 2_000_000
 
 
-def _extract_schema_rows(df: DataFrame):
-    sel = df.filter(
-        F.col("p").isin(*_SCHEMA_PREDS)
-        | ((F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE))
-    ).select("s", "p", "o")
-    rows = sel.limit(_SCHEMA_COLLECT_CAP + 1).collect()
+def _is_schema():
+    return F.col("p").isin(*_SCHEMA_PREDS) | (
+        (F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE)
+    )
+
+
+def _schema_triples(rows) -> list:
     if len(rows) > _SCHEMA_COLLECT_CAP:
         raise ValueError(
             f"schema exceeds {_SCHEMA_COLLECT_CAP} triples — not a vocabulary; "
             "driver-side schema closure disabled at this size"
         )
     return [(r[0], r[1], r[2]) for r in rows]
+
+
+def _extract_schema_rows(df: DataFrame):
+    sel = df.filter(_is_schema()).select("s", "p", "o")
+    return _schema_triples(sel.limit(_SCHEMA_COLLECT_CAP + 1).collect())
 
 
 # above this many entries a schema relation is applied via broadcast
@@ -200,12 +214,12 @@ def rdfs_saturate(
     subPropertyOf / domain / range, rdfs5/11/12/13) is closed driver-side
     — it is vocabulary-sized — and broadcast; each iteration joins ONLY
     the previous round's delta against the broadcast schema (rdfs2/3/7/9),
-    anti-joins against the accumulated known partitions, and stops on an
-    empty delta.  The full triple table is scanned exactly once (round 1)
-    and never re-shuffled: `distinct()` leaves every accumulated part
-    hash-partitioned on (s,p,o), so the per-round anti-joins shuffle only
-    the delta side.  Rule semantics match `reasoner/src/ruleset/_rdfs.rs:
-    57-97`; the loop-until-empty-delta replaces sophia's `while changed`.
+    anti-joins against the accumulated known triples, and stops on an
+    empty delta (:func:`~.fixpoint.semi_naive`).  The rules see the full
+    triple table once (round 1); later rounds join only the delta, except
+    that a schema entry inferred later is applied once to everything
+    known.  Rule semantics match `reasoner/src/ruleset/_rdfs.rs:57-97`;
+    the loop-until-empty-delta replaces sophia's `while changed`.
 
     ``with_axioms=True`` seeds the RDF/RDFS vocabulary axioms (sophia's
     ``prepare_*_vocab``); off by default so data-only entailment stays
@@ -216,26 +230,30 @@ def rdfs_saturate(
     if with_axioms:
         ax = spark.createDataFrame(_AXIOMS, "s string, p string, o string")
         base = base.unionByName(ax)
-    # distinct() hash-partitions on (s,p,o); localCheckpoint preserves it
     base = base.distinct().localCheckpoint(eager=True)
 
     schema = _Schema()
     schema.absorb(_extract_schema_rows(base))
     schema.close()
 
-    known = [base]  # mutually-disjoint distinct parts, all (s,p,o)-partitioned
-    frontier = base
+    def _snapshot() -> dict:
+        return {k: set(getattr(schema, k)) for k in ("sp", "dom", "rng", "sc")}
+
     # schema entries already joined against ALL data (round 1 joins the
     # full base): when the schema grows later, ONLY the new entries are
     # re-applied to the accumulated data (rules-as-deltas semi-naive)
-    applied = {
-        "sp": set(schema.sp),
-        "dom": set(schema.dom),
-        "rng": set(schema.rng),
-        "sc": set(schema.sc),
-    }
-    schema_changed = False
-    for _round in range(max_iter):
+    applied = _snapshot()
+
+    def derive(frontier: DataFrame, all_known: DataFrame, row) -> DataFrame:
+        nonlocal applied
+        if row is None:
+            schema_changed = True
+        else:
+            # inferred triples may extend the schema (e.g. an inferred
+            # (p type CMP) enables rdfs12) — deltas are small, absorb is cheap
+            schema_changed = schema.absorb(_schema_triples(row["schema_rows"]))
+            if schema_changed:
+                schema.close()
         # Composed rule pass: rdfs7 feeds rdfs2/3, whose type conclusions
         # feed rdfs9 -- the whole common cascade lands in ONE delta round
         # (the closed sp/sc relations make each rule one-shot-complete).
@@ -296,53 +314,44 @@ def rdfs_saturate(
         d_dom = schema.dom - applied["dom"]
         d_rng = schema.rng - applied["rng"]
         d_sc = schema.sc - applied["sc"]
-        if d_sp or d_dom or d_rng or d_sc:
-            all_known = known[0]
-            for k in known[1:]:
-                all_known = all_known.unionByName(k)
-            if d_sp:
-                parts.append(
-                    _rel_apply(spark, d_sp, all_known, "p").select(
-                        "s", F.col("v").alias("p"), "o"
-                    )
+        if d_sp:
+            parts.append(
+                _rel_apply(spark, d_sp, all_known, "p").select(
+                    "s", F.col("v").alias("p"), "o"
                 )
-            if d_dom:
-                parts.append(
-                    _rel_apply(spark, d_dom, all_known, "p").select(
-                        "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
-                    )
+            )
+        if d_dom:
+            parts.append(
+                _rel_apply(spark, d_dom, all_known, "p").select(
+                    "s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o")
                 )
-            if d_rng:
-                parts.append(
-                    _rel_apply(spark, d_rng, all_known, "p")
-                    .filter(~F.col("o").startswith('"'))
-                    .select(
-                        F.col("o").alias("s"),
-                        F.lit(T_TYPE).alias("p"),
-                        F.col("v").alias("o"),
-                    )
+            )
+        if d_rng:
+            parts.append(
+                _rel_apply(spark, d_rng, all_known, "p")
+                .filter(~F.col("o").startswith('"'))
+                .select(
+                    F.col("o").alias("s"),
+                    F.lit(T_TYPE).alias("p"),
+                    F.col("v").alias("o"),
                 )
-            if d_sc:
-                parts.append(
-                    _rel_apply(
-                        spark,
-                        d_sc,
-                        all_known.filter(F.col("p") == T_TYPE).select(
-                            "s", F.col("o").alias("C1")
-                        ),
-                        "C1",
-                    ).select("s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o"))
-                )
-            applied = {
-                "sp": set(schema.sp),
-                "dom": set(schema.dom),
-                "rng": set(schema.rng),
-                "sc": set(schema.sc),
-            }
+            )
+        if d_sc:
+            parts.append(
+                _rel_apply(
+                    spark,
+                    d_sc,
+                    all_known.filter(F.col("p") == T_TYPE).select(
+                        "s", F.col("o").alias("C1")
+                    ),
+                    "C1",
+                ).select("s", F.lit(T_TYPE).alias("p"), F.col("v").alias("o"))
+            )
+        applied = _snapshot()
         # schema-closure triples (rdfs5/11/12/13 conclusions) are entailed;
         # emitted in round 1 and whenever the schema changed — the
-        # anti-join below drops the already-known ones
-        if _round == 0 or schema_changed:
+        # driver's anti-join drops the already-known ones
+        if schema_changed:
             ct = schema.closure_triples()
             if ct:
                 parts.append(
@@ -352,48 +361,21 @@ def rdfs_saturate(
         new = parts[0]
         for part in parts[1:]:
             new = new.unionByName(part)
-        new = new.distinct()
-        for k in known:
-            # shuffle-hash: both sides are already hash-partitioned on
-            # (s,p,o) from their distinct(), so the anti-join needs no
-            # exchange and no sort
-            new = new.join(k.hint("shuffle_hash"), ["s", "p", "o"], "left_anti")
-        # ONE driver action per round: the lazy localCheckpoint
-        # materializes inside the same job as the summary aggregate,
-        # which returns emptiness AND the (vocabulary-sized) new schema
-        # rows together — a fixpoint round costs a single scheduler
-        # barrier instead of three (checkpoint + isEmpty + collect),
-        # which is what driver latency amplifies on a busy cluster.
-        new = new.localCheckpoint(eager=False)
-        is_schema = F.col("p").isin(*_SCHEMA_PREDS) | (
-            (F.col("p") == T_TYPE) & F.col("o").isin(T_CMP, T_DATATYPE)
-        )
-        summary = new.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.collect_list(F.when(is_schema, F.struct("s", "p", "o"))).alias(
-                "schema_rows"
-            ),
-        ).first()
-        if summary["n"] == 0:
-            break
-        known.append(new)
-        frontier = new
-        rows = [(r["s"], r["p"], r["o"]) for r in summary["schema_rows"]]
-        if len(rows) > _SCHEMA_COLLECT_CAP:
-            raise ValueError(
-                f"schema exceeds {_SCHEMA_COLLECT_CAP} triples — not a "
-                "vocabulary; driver-side schema closure disabled at this size"
-            )
-        # inferred triples may extend the schema (e.g. an inferred
-        # (p type CMP) enables rdfs12) — deltas are small, absorb is cheap
-        schema_changed = schema.absorb(rows)
-        if schema_changed:
-            schema.close()
+        return new
 
-    out = known[0]
-    for k in known[1:]:
-        out = out.unionByName(k)
-    return out
+    # the round's one action also returns the (vocabulary-sized) new
+    # schema rows, which the next round's derive absorbs
+    return semi_naive(
+        "rdfs_saturate",
+        base,
+        derive,
+        max_iter=max_iter,
+        signal=[
+            F.collect_list(F.when(_is_schema(), F.struct("s", "p", "o"))).alias(
+                "schema_rows"
+            )
+        ],
+    )
 
 
 def _is_existential(enc: str) -> bool:

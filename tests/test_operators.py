@@ -94,6 +94,14 @@ class TestPaths:
             ("<a>", "<c>"), ("<b>", "<d>"), ("<a>", "<d>"),
         }
 
+    def test_one_or_more_cap_raises(self, spark):
+        """A 45-edge chain needs 45 BFS rounds; at the default cap of 40
+        p+ must fail instead of dropping every pair longer than 41."""
+        chain = [(f"<n{i}>", f"<n{i + 1}>") for i in range(45)]
+        pairs = spark.createDataFrame(chain, "src string, dst string")
+        with pytest.raises(RuntimeError, match="one_or_more.*max_iter=40"):
+            P.one_or_more(pairs).collect()
+
     def test_zero_or_more_includes_identity(self, triples):
         pp = P.pred(triples, "<p>")
         got = {(r["src"], r["dst"]) for r in P.zero_or_more(pp, triples).collect()}
